@@ -166,11 +166,12 @@ def parse_webm_metadata(data: bytes | None) -> dict | None:
         # (int(NaN) raises) or overflow the LongType column downstream
         # (a garbage f64 can be 1e300): the spec's Duration is a
         # non-negative finite float, so anything else parses as
-        # absent. Found by the r12 garbage-fuzz property test.
-        if math.isfinite(duration_ticks) and duration_ticks >= 0:
-            ms = int(duration_ticks * timecode_scale_ns // 1_000_000)
-            if ms <= 2 ** 63 - 1:
-                duration_ms = ms
+        # absent. Found by the r12 garbage-fuzz property test. The
+        # check runs on the SCALED value: a finite huge Duration times
+        # TimecodeScale overflows to inf, and inf // 1e6 is NaN.
+        scaled = duration_ticks * timecode_scale_ns // 1_000_000
+        if math.isfinite(scaled) and 0 <= scaled <= 2 ** 63 - 1:
+            duration_ms = int(scaled)
     return {
         "container": "webm",
         "brand": doc_type,

@@ -12,27 +12,30 @@ this engine defines its deterministic sample as a Knuth multiplicative
 hash over the row id — exact-N, seed-stable, and reproducible in ANY
 engine (the DuckDB oracle runs the same arithmetic). At cluster scale
 this is also better than ``orderBy(rand())``: the top-N-by-hash is a
-TakeOrderedAndProject (per-partition heaps), not a full sort.
+TakeOrderedAndProject (per-partition heaps), not a full sort. Its output
+is one partition of at most N rows already sorted by (_sk, id), so the
+sample is numbered with a plain ``row_number`` over
+``bounded_global_window`` (a post-``limit`` head): no extra exchange,
+sort or job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from parquet_extractor_spark.constants import (
     DEFAULT_SEED,
     FRONTMATTER_VALUE_CAP,
 )
 from parquet_extractor_spark.functions.text import sanitize_filename, zero_pad
+from parquet_extractor_spark.functions.windows import bounded_global_window
 from parquet_extractor_spark.resolver import resolve_roles
 from parquet_extractor_spark.sources.tables import load_table
 
 KNUTH = 2654435761  # Knuth multiplicative hash constant
 MOD = 4294967296  # 2^32
 SAMPLE_N = 100
-ROWNUM_BUCKETS_SHIFT = 27  # 2^32 / 2^27 = 32 order-preserving buckets
 
 
 def sample_key(id_col: Column, seed: int = DEFAULT_SEED) -> Column:
@@ -65,48 +68,6 @@ def sample_key_sql(id_expr: str, seed: int = DEFAULT_SEED) -> str:
     return f"(({inner}) % {MOD})"
 
 
-def global_row_number(
-    df: DataFrame, order_cols: list[str], out: str = "rn"
-) -> DataFrame:
-    """Scale-safe global row numbering in the total order of
-    ``order_cols`` (first of which must be ``_sk``).
-
-    ``Window.orderBy`` with no partitionBy collapses to a single
-    partition — fine for a 100-row sample, a driver-side chokepoint at
-    n=10M. Instead: bucket by the HIGH bits of ``_sk`` (order-
-    preserving ranges, so global order = bucket order + in-bucket
-    order), number within buckets in parallel, then add per-bucket
-    offsets carried as one broadcast map column (≤32 entries) — no
-    single-partition window anywhere, no driver collect.
-    """
-    bucket = F.shiftright(
-        F.col("_sk").cast("bigint"), ROWNUM_BUCKETS_SHIFT
-    )
-    b = df.withColumn("_bucket", bucket)
-    w = Window.partitionBy("_bucket").orderBy(*order_cols)
-    numbered = b.withColumn("_rn_local", F.row_number().over(w))
-    counts_map = (
-        b.groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_bucket", "_n")))
-            ).alias("_cmap")
-        )
-    )
-    offset = F.aggregate(
-        F.map_entries(F.col("_cmap")),
-        F.lit(0).cast("bigint"),
-        lambda acc, e: acc
-        + F.when(e["key"] < F.col("_bucket"), e["value"]).otherwise(0),
-    )
-    return (
-        numbered.join(F.broadcast(counts_map), how="cross")
-        .withColumn(out, (offset + F.col("_rn_local")).cast("int"))
-        .drop("_bucket", "_rn_local", "_cmap")
-    )
-
-
 def deterministic_sample(
     df: DataFrame, id_col: str, n: int, seed: int = DEFAULT_SEED
 ) -> DataFrame:
@@ -116,6 +77,13 @@ def deterministic_sample(
         df.withColumn("_sk", sample_key(F.col(id_col), seed))
         .orderBy("_sk", id_col)
         .limit(n)
+    )
+
+
+def number_sample(sampled: DataFrame, id_col: str) -> DataFrame:
+    """Add ``rn`` = 1..n in (_sk, id) order to a post-limit sample."""
+    return sampled.withColumn(
+        "rn", F.row_number().over(bounded_global_window("_sk", id_col))
     )
 
 
@@ -144,7 +112,7 @@ def extract_plan(
     roles = resolve_roles(docs)
 
     sampled = deterministic_sample(docs, "doc_id", n, seed)
-    numbered = global_row_number(sampled, ["_sk", "doc_id"])
+    numbered = number_sample(sampled, "doc_id")
 
     title = F.concat(F.lit("document_"), F.col("doc_id").cast("string"))
     filename = F.concat(
@@ -181,7 +149,7 @@ def extract_files(
     docs = load_table(spark, sf_dir, "documents")
     roles = resolve_roles(docs)
     sampled = deterministic_sample(docs, "doc_id", n, seed)
-    numbered = global_row_number(sampled, ["_sk", "doc_id"])
+    numbered = number_sample(sampled, "doc_id")
     title = F.concat(F.lit("document_"), F.col("doc_id").cast("string"))
     filename = F.concat(
         zero_pad(F.col("rn")), F.lit("_"), sanitize_filename(title), F.lit(".md")
@@ -275,7 +243,7 @@ def extract_any_parquet(
 
     key = (portable_hash64(content) + F.lit(seed)) % F.lit(MOD)
     sampled = df.withColumn("_sk", key).orderBy("_sk", roles.content).limit(n)
-    numbered = global_row_number(sampled, ["_sk", roles.content])
+    numbered = number_sample(sampled, roles.content)
 
     if roles.title:
         title = F.coalesce(

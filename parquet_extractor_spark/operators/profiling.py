@@ -524,8 +524,10 @@ def warehouse_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_null_rows",
                 "n_orphan_rows",
                 "n_orphan_keys",
+                # an empty child has no share: NULL, not DIVIDE_BY_ZERO
                 F.expr(
-                    "CAST(n_orphan_rows * 1000000L div n_rows AS BIGINT)"
+                    "CAST(n_orphan_rows * 1000000L div NULLIF(n_rows, 0)"
+                    " AS BIGINT)"
                 ).alias("orphan_share_micro"),
             )
         )
@@ -538,25 +540,24 @@ def warehouse_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _warehouse_fk_audit_oracle() -> str:
     parts = []
     for name, child_t, child_k, parent_t, parent_k in FK_RELATIONSHIPS:
+        orphan = (
+            f"ck IS NOT NULL AND ck NOT IN (SELECT {parent_k} FROM "
+            f"{parent_t} WHERE {parent_k} IS NOT NULL)"
+        )
+        # COALESCE(sum, 0): an empty child reports 0 like the Spark side
         parts.append(f"""
 SELECT '{name}' AS relationship,
-       CAST(sum(rows_) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_keys,
-       CAST(sum(CASE WHEN ck IS NULL THEN rows_ ELSE 0 END) AS BIGINT)
-           AS n_null_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
-                (SELECT {parent_k} FROM {parent_t}
-                 WHERE {parent_k} IS NOT NULL)
-                THEN rows_ ELSE 0 END) AS BIGINT) AS n_orphan_rows,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
-                (SELECT {parent_k} FROM {parent_t}
-                 WHERE {parent_k} IS NOT NULL)
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan_keys,
-       CAST(sum(CASE WHEN ck IS NOT NULL AND ck NOT IN
-                (SELECT {parent_k} FROM {parent_t}
-                 WHERE {parent_k} IS NOT NULL)
-                THEN rows_ ELSE 0 END) * 1000000 // sum(rows_)
+       CAST(COALESCE(sum(rows_), 0) AS BIGINT) AS n_rows,
+       CAST(COALESCE(sum(CASE WHEN ck IS NOT NULL THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_keys,
+       CAST(COALESCE(sum(CASE WHEN ck IS NULL THEN rows_ ELSE 0 END), 0)
+            AS BIGINT) AS n_null_rows,
+       CAST(COALESCE(sum(CASE WHEN {orphan} THEN rows_ ELSE 0 END), 0)
+            AS BIGINT) AS n_orphan_rows,
+       CAST(COALESCE(sum(CASE WHEN {orphan} THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_orphan_keys,
+       CAST(COALESCE(sum(CASE WHEN {orphan} THEN rows_ ELSE 0 END), 0)
+            * 1000000 // NULLIF(COALESCE(sum(rows_), 0), 0)
             AS BIGINT) AS orphan_share_micro
 FROM (SELECT {child_k} AS ck, count(*) AS rows_
       FROM {child_t} GROUP BY 1)""")

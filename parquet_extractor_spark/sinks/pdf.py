@@ -1,8 +1,8 @@
 """PDF sink (SURVEY §2.1 S9, api.py:256-342 / 761-821).
 
-The sanitization/truncation/chunking stages are pure Column
-expressions (they're what the reference spends its lines on); only the
-final render is Python, run per-partition on executors.
+Cleanup (HTML unescape, ASCII and control-char scrubs, caps), chunking
+and render all run in plain Python inside the sink's one
+``mapPartitions`` pass, so each row crosses into a Python worker once.
 
 The render itself is the pure-Python PDF 1.4 writer in
 ``sinks/pdfwriter.py`` — real, viewer-openable PDFs with no external
@@ -11,9 +11,10 @@ dependency (the reference uses fpdf, absent in this container).
 
 from __future__ import annotations
 
-import os
+import html
+import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_extractor_spark.constants import (
@@ -21,26 +22,25 @@ from parquet_extractor_spark.constants import (
     PDF_CONTENT_CAP,
     PDF_TITLE_CAP,
 )
-from parquet_extractor_spark.functions.text import (
-    control_char_scrub,
-    non_ascii_scrub,
-    truncate,
-)
+from parquet_extractor_spark.functions.text import NON_ASCII_RE
+from parquet_extractor_spark.sinks.markdown import write_rows
 from parquet_extractor_spark.sinks.pdfwriter import render_pdf
 
+_NON_ASCII = re.compile(NON_ASCII_RE)
+_CONTROL_CHARS = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F]")
 
-def pdf_ready_columns(title: Column, content: Column) -> tuple[Column, Column]:
-    """The reference's pre-render cleanup: HTML unescape (api.py:312,
-    pandas_udf — the one Python step), then ASCII scrub (api.py:277),
-    control-char scrub (api.py:802), 80-char title cap (api.py:271),
-    50k content cap (api.py:327) as pure expressions."""
-    from parquet_extractor_spark.functions.html import unescape_html
 
-    clean_title = truncate(non_ascii_scrub(title), PDF_TITLE_CAP)
-    clean_content = truncate(
-        control_char_scrub(non_ascii_scrub(unescape_html(content), " ")),
-        PDF_CONTENT_CAP,
-    )
+def pdf_ready(title: str | None, content: str | None) -> tuple[str, str]:
+    """The reference's pre-render cleanup: title ASCII scrub to "_"
+    (api.py:277) and 80-char cap (api.py:271); content HTML unescape
+    (api.py:312), ASCII scrub to " ", control-char scrub except
+    tab/newline/CR (api.py:802) and 50k cap (api.py:327). Both regexes
+    match per code point and both caps count code points, as Spark's
+    regexp_replace and substring do."""
+    clean_title = _NON_ASCII.sub("_", title or "")[:PDF_TITLE_CAP]
+    clean_content = _CONTROL_CHARS.sub(
+        " ", _NON_ASCII.sub(" ", html.unescape(content or ""))
+    )[:PDF_CONTENT_CAP]
     return clean_title, clean_content
 
 
@@ -56,6 +56,11 @@ def render_pdf_bytes(title: str, doc_id: str, content: str) -> bytes:
     return render_pdf(title, doc_id, _chunks(content))
 
 
+def _render_row(row) -> bytes:
+    title, content = pdf_ready(row["title"], row["content"])
+    return render_pdf_bytes(title, row["doc_id"] or "", content)
+
+
 def write_pdfs(
     df: DataFrame,
     out_dir: str,
@@ -64,34 +69,13 @@ def write_pdfs(
     id_col: str = "doc_id",
     content_col: str = "content",
 ) -> dict:
-    """foreachPartition PDF writer with the same skip/error contract
-    as the markdown sink."""
-    os.makedirs(out_dir, exist_ok=True)
-    spark = df.sparkSession
-    clean_title, clean_content = pdf_ready_columns(
-        F.col(title_col), F.col(content_col)
-    )
+    """One-job PDF writer with the markdown sink's filename and
+    per-row error contract; cleanup and render both run in the task."""
     work = df.select(
         F.col(filename_col).alias("filename"),
-        clean_title.alias("title"),
+        F.col(title_col).alias("title"),
         F.col(id_col).cast("string").alias("doc_id"),
-        clean_content.alias("content"),
+        F.col(content_col).alias("content"),
     )
-    sc = spark.sparkContext
-    written_acc = sc.accumulator(0)
-    failed_acc = sc.accumulator(0)
-
-    def _write_partition(rows):
-        for row in rows:
-            try:
-                data = render_pdf_bytes(
-                    row["title"] or "", row["doc_id"] or "", row["content"] or ""
-                )
-                with open(os.path.join(out_dir, row["filename"]), "wb") as fh:
-                    fh.write(data)
-                written_acc.add(1)
-            except Exception:
-                failed_acc.add(1)
-
-    work.foreachPartition(_write_partition)
-    return {"written": written_acc.value, "failed": failed_acc.value}
+    written, _, failed = write_rows(work, out_dir, _render_row)
+    return {"written": written, "failed": failed}

@@ -1,4 +1,5 @@
 import os
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -7,11 +8,12 @@ from parquet_extractor_spark.operators.extract import (
     deterministic_sample,
     extract_files,
     extract_plan,
+    number_sample,
 )
 from parquet_extractor_spark.sinks.markdown import write_files
 from parquet_extractor_spark.sinks.pdf import (
     _chunks,
-    pdf_ready_columns,
+    pdf_ready,
     render_pdf_bytes,
     write_pdfs,
 )
@@ -76,17 +78,153 @@ def test_markdown_sink_counts_row_errors(spark, tmp_path):
     assert res["failed"] == 1  # per-row tolerance (api.py:344-346)
 
 
-def test_pdf_chunking_caps(spark):
+def test_pdf_chunking_caps():
     # 50k cap and 1000-char chunks (api.py:327, api.py:793)
-    title, content = pdf_ready_columns(
-        F.lit("T" * 200 + "é"), F.lit("x" * (PDF_CONTENT_CAP + 5000))
-    )
-    row = spark.range(1).select(title.alias("t"), content.alias("c")).first()
-    assert len(row.t) == PDF_TITLE_CAP
-    assert len(row.c) == PDF_CONTENT_CAP
-    chunks = _chunks(row.c)
+    t, c = pdf_ready("T" * 200 + "é", "x" * (PDF_CONTENT_CAP + 5000))
+    assert len(t) == PDF_TITLE_CAP
+    assert len(c) == PDF_CONTENT_CAP
+    chunks = _chunks(c)
     assert all(len(c) <= 1000 for c in chunks)
-    assert sum(len(c) for c in chunks) == PDF_CONTENT_CAP
+    assert sum(len(ch) for ch in chunks) == PDF_CONTENT_CAP
+
+
+def test_pdf_ready_matches_spark_expressions(spark):
+    """pdf_ready is the plain-Python form of the cleanup the sink used
+    to run as Spark expressions (unescape_html, then regexp_replace
+    scrubs and substring caps): same output on entities, non-ASCII
+    (a supplementary-plane character is ONE code point in both),
+    control characters, NULLs and over-cap inputs."""
+    from parquet_extractor_spark.functions.html import unescape_html
+    from parquet_extractor_spark.functions.text import NON_ASCII_RE
+
+    control_re = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
+    smile = "\U0001F600"
+    cases = [
+        ("Caf\u00e9 &amp; co", "a &amp; b &lt;i&gt; &eacute; &#128512; &nbsp;"),
+        ("T" * 79 + smile + "tail", "x\x00y\x07\x0b\x0c\t\n\r\x1f\x7fz"),
+        (smile * 100, smile * (PDF_CONTENT_CAP + 7)),
+        ("\u00e9" * 200, "\u00e9" * PDF_CONTENT_CAP + "&amp;" * 10),
+        ("plain", "&lt;" * (PDF_CONTENT_CAP + 3)),
+        (None, None),
+        ("", "\u2028line\u0085sep &#0; &#x1F;"),
+    ]
+    df = spark.createDataFrame(cases, "title string, content string")
+    old_title = F.substring(
+        F.regexp_replace("title", NON_ASCII_RE, "_"), 1, PDF_TITLE_CAP
+    )
+    old_content = F.substring(
+        F.regexp_replace(
+            F.regexp_replace(unescape_html("content"), NON_ASCII_RE, " "),
+            control_re,
+            " ",
+        ),
+        1,
+        PDF_CONTENT_CAP,
+    )
+    want = [
+        (r.t or "", r.c or "")
+        for r in df.select(
+            old_title.alias("t"), old_content.alias("c")
+        ).collect()
+    ]
+    assert [pdf_ready(t, c) for t, c in cases] == want
+    assert len(want[2][1]) == PDF_CONTENT_CAP  # caps count code points
+
+
+def _jobs_fired(spark, action) -> tuple:
+    """Run ``action`` under a fresh job group; (its result, job count)."""
+    sc = spark.sparkContext
+    group = f"sink-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_file_sinks_fire_one_spark_job(spark, sf_small, tmp_path):
+    """Each sink call is ONE Spark job: no count, no listing scan, no
+    separate cleanup stage — the sample, its numbering and the writes
+    all run in the sink's mapPartitions job."""
+    md = extract_files(spark, sf_small, n=40)
+    res, n_jobs = _jobs_fired(spark, lambda: write_files(md, str(tmp_path / "md")))
+    assert res == {"written": 40, "skipped": 0, "failed": 0}
+    assert n_jobs == 1
+    # the skip-existing re-run is one job too
+    res, n_jobs = _jobs_fired(spark, lambda: write_files(md, str(tmp_path / "md")))
+    assert res == {"written": 0, "skipped": 40, "failed": 0}
+    assert n_jobs == 1
+
+    docs = (
+        spark.read.parquet(f"{sf_small}/documents.parquet")
+        .orderBy("doc_id")
+        .limit(12)
+        .select(
+            F.concat(F.col("doc_id").cast("string"), F.lit(".pdf")).alias(
+                "filename"
+            ),
+            F.lit("T &amp; \u00e9").alias("title"),
+            "doc_id",
+            F.col("text").alias("content"),
+        )
+    )
+    res, n_jobs = _jobs_fired(spark, lambda: write_pdfs(docs, str(tmp_path / "pdf")))
+    assert res == {"written": 12, "failed": 0}
+    assert n_jobs == 1
+
+
+def test_markdown_sink_skip_existing_and_hidden_names(spark, tmp_path):
+    """A pre-planted target is skipped and left untouched; names the
+    listing treats as hidden (leading '.' or '_') are not skipped, as
+    Spark's file listing never reported them."""
+    out = tmp_path / "out"
+    out.mkdir()
+    for name in ("planted.md", ".hidden", "_meta"):
+        (out / name).write_text("old")
+    (out / "subdir.md").mkdir()  # not a regular file: not skipped
+    df = spark.createDataFrame(
+        [
+            ("new.md", "a"),
+            ("planted.md", "b"),
+            (".hidden", "c"),
+            ("_meta", "d"),
+            ("subdir.md", "e"),
+        ],
+        "filename string, body string",
+    )
+    res = write_files(df, str(out))
+    assert res == {"written": 3, "skipped": 1, "failed": 1}
+    assert (out / "planted.md").read_text() == "old"
+    assert (out / ".hidden").read_text() == "c"
+    assert (out / "_meta").read_text() == "d"
+    assert (out / "new.md").read_text() == "a"
+
+
+def test_markdown_sink_null_filename_fails_row(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("ok.md", "fine"), (None, "nameless"), ("empty.md", None)],
+        "filename string, body string",
+    )
+    res = write_files(df, str(tmp_path / "out"))
+    assert res == {"written": 2, "skipped": 0, "failed": 1}
+    assert (tmp_path / "out" / "empty.md").read_text() == ""
+
+
+def test_sample_numbering_is_dense_in_sample_key_order(spark, sf_small):
+    """rn is 1..n in (_sk, doc_id) order for a sample far wider than
+    any single sample-key range, and extract_plan's filename prefix is
+    that rank."""
+    n = 300
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    rows = number_sample(deterministic_sample(docs, "doc_id", n), "doc_id")
+    got = sorted((r._sk, r.doc_id, r.rn) for r in rows.collect())
+    assert [rn for _, _, rn in got] == list(range(1, n + 1))
+    rank = {doc_id: rn for _, doc_id, rn in got}
+    plan = extract_plan(spark, sf_small, n=n).collect()
+    assert len(plan) == n
+    for r in plan:
+        assert r.filename[:5] == f"{rank[r.doc_id]:04d}_"
 
 
 def test_pdf_sink_writes_files(spark, tmp_path):

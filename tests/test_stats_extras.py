@@ -610,6 +610,52 @@ def test_warehouse_fk_audit_planted_orphans(spark, sf_small, tmp_path):
     assert got["lineitem.orderkey->orders"].n_orphan_rows == 0
 
 
+def test_warehouse_fk_audit_empty_child_matches_oracle(spark, sf_small, tmp_path):
+    """An EMPTY child table (supplier): Spark reports zero counts and a
+    NULL share for supplier->nation — no DIVIDE_BY_ZERO — and the DuckDB
+    oracle returns the same rows (COALESCE(sum, 0), not NULL), while
+    lineitem->supplier turns every lineitem row into an orphan."""
+    from parquet_extractor_spark.operators.profiling import (
+        WAREHOUSE_FK_AUDIT_SQL,
+        warehouse_fk_audit,
+    )
+
+    fixture = tmp_path / "sf"
+    fixture.mkdir()
+    tables = ("region", "nation", "customer", "supplier", "part",
+              "orders", "lineitem")
+    for t in tables:
+        where = " WHERE false" if t == "supplier" else ""
+        duckdb.sql(
+            f"COPY (SELECT * FROM '{sf_small}/{t}.parquet'{where}) TO "
+            f"'{fixture}/{t}.parquet' (FORMAT PARQUET)"
+        )
+    sdf = warehouse_fk_audit(spark, str(fixture))
+    cols = sdf.columns
+    got = sorted(tuple(r) for r in sdf.collect())
+
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{fixture}/{t}.parquet'"
+        )
+    rel = con.sql(WAREHOUSE_FK_AUDIT_SQL)
+    assert list(rel.columns) == cols
+    want = sorted(rel.fetchall())
+    con.close()
+    assert got == want
+
+    by_name = {r[0]: dict(zip(cols, r)) for r in got}
+    empty = by_name["supplier.nationkey->nation"]
+    assert (empty["n_rows"], empty["n_keys"], empty["n_orphan_rows"]) == (
+        0, 0, 0,
+    )
+    assert empty["orphan_share_micro"] is None
+    li = by_name["lineitem.suppkey->supplier"]
+    assert li["n_orphan_rows"] == li["n_rows"] > 0
+    assert li["orphan_share_micro"] == 1_000_000
+
+
 def test_events_xmr_control_hand_computed(spark, tmp_path):
     """Stable series with a single huge spike: limits recomputed by
     hand from the moving ranges; exactly the spike day flags."""
