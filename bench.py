@@ -25,16 +25,13 @@ Prints a short line then ONE compact JSON line (the parse target):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 PROTOCOL LABEL (r10 verdict item 2): every payload carries
-``"mode": "inprocess" | "chunked"``. The CANONICAL committed
-protocol is **inprocess** — one JVM sweeping the whole registry,
-which is what the driver's round-to-round trend line measures.
-Chunked runs (SPARK_GRAFT_BENCH_CHUNK=n, fresh-JVM children) are
-side-car diagnostics; their totals are NOT comparable to the trend
-line and the mode field is how a reader tells them apart (r10's
-"441s vs 309s" confusion was two unlabeled protocols in one trend).
-The compact stdout payload also carries ``slowest`` — the ten most
-expensive queries of the run — so driver rounds see the heavy tail
-without reading BENCH_LOCAL.json.
+``"mode": "inprocess"`` — one JVM sweeping the whole registry, which
+is what the driver's round-to-round trend line measures. The label
+stays so these payloads are told apart from older committed ones
+that carry ``"mode": "chunked"`` (a since-removed fresh-JVM
+diagnostic). The compact stdout payload also carries ``slowest`` —
+the ten most expensive queries of the run — so driver rounds see the
+heavy tail without reading BENCH_LOCAL.json.
 
 ISOLATION PROTOCOL (the adjudication rule for apparent regressions —
 r08/r09 verdicts accepted it twice): a ~250-query sweep accumulates
@@ -251,28 +248,6 @@ def main() -> None:
     qs = entrymod.queries()
     bench_set = _bench_set(qs)
 
-    # Chunked mode (OPT-IN diagnostic, SPARK_GRAFT_BENCH_CHUNK=n): a
-    # ~250-query sweep in ONE JVM accumulates state that inflates a
-    # handful of late heavy queries up to ~10x over isolation (r10
-    # measured doc_fingerprints 15.9s in-suite vs 1.2s in a fresh
-    # chunk), and the orchestrator runs the set in fresh-JVM child
-    # processes and merges their payloads. It stays OFF by default
-    # because the per-chunk JVM/warmup/tier overhead (~60-120s across
-    # 5 chunks) overflows the driver's hard wall budget and SKIPS
-    # queries — a missing row is worse than an inflated one; the
-    # isolation protocol (header) is the sanctioned adjudication for
-    # individual outliers. Children (and explicit BENCH_ONLY
-    # iteration runs) take the single-session path below.
-    chunk = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "0"))
-    if (
-        chunk > 0
-        and len(bench_set) > chunk
-        and os.environ.get("SPARK_GRAFT_BENCH_CHILD") != "1"
-        and not os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    ):
-        _orchestrate(bench_set, chunk)
-        return
-
     from parquet_extractor_spark.session import get_spark, release_cached
 
     spark = get_spark("bench")
@@ -370,7 +345,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    _emit_payload(timings, errors, skipped, suspect, mode="inprocess")
+    _emit_payload(timings, errors, skipped, suspect)
 
 
 def _warm_trained_artifacts(spark) -> None:
@@ -412,112 +387,6 @@ def _warm_trained_artifacts(spark) -> None:
             print(f"# warm-up {label} skipped: {exc}", file=sys.stderr)
 
 
-def _orchestrate(bench_set: list[str], chunk_size: int) -> None:
-    """Run the bench set in fresh-JVM child processes of
-    ``chunk_size`` queries each and merge their BENCH_LOCAL.json
-    payloads into one (ordered) payload + stdout contract.
-
-    Each child is a plain ``python bench.py`` with
-    SPARK_GRAFT_BENCH_ONLY pinned to its chunk — a brand-new JVM, so
-    codegen/metaspace/listener accumulation resets at every chunk
-    boundary and per-query medians track their isolation values. The
-    global wall budget is threaded through: children receive the
-    REMAINING budget/hard allowance, and once the soft budget is
-    spent later chunks drop to one run per query (same graceful
-    degradation as the single-session path; since r11 the persistent
-    artifact/tier store means children share trained models and tiers
-    instead of rebuilding per chunk).
-
-    Children write their payloads to a TEMP file (threaded through
-    SPARK_GRAFT_BENCH_PAYLOAD, consumed by _child_payload_path), so
-    the git-tracked BENCH_LOCAL.json is only ever written once, at
-    the end, with the merged payload — an orchestrator that dies
-    mid-run leaves the committed artifact untouched (r10 advice)."""
-    import subprocess
-    import tempfile
-
-    budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "540"))
-    hard_s = float(os.environ.get("SPARK_GRAFT_BENCH_HARD_S", "900"))
-    t0 = time.time()
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    skipped: list[str] = []
-    suspect = False
-    chunks = [
-        bench_set[i : i + chunk_size]
-        for i in range(0, len(bench_set), chunk_size)
-    ]
-    child_payload = os.path.join(
-        tempfile.gettempdir(), f"bench-chunk-{os.getpid()}.json"
-    )
-    for idx, chunk in enumerate(chunks):
-        elapsed = time.time() - t0
-        if elapsed > hard_s:
-            skipped += chunk
-            continue
-        env = dict(os.environ)
-        env["SPARK_GRAFT_BENCH_CHILD"] = "1"
-        env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(chunk)
-        env["SPARK_GRAFT_BENCH_PAYLOAD"] = child_payload
-        env["SPARK_GRAFT_BENCH_BUDGET_S"] = str(
-            max(30.0, budget_s - elapsed)
-        )
-        env["SPARK_GRAFT_BENCH_HARD_S"] = str(max(60.0, hard_s - elapsed))
-        if elapsed > budget_s:
-            env["SPARK_GRAFT_BENCH_RUNS"] = "1"
-        print(
-            f"# chunk {idx + 1}/{len(chunks)}: {len(chunk)} queries "
-            f"in a fresh JVM ({elapsed:.0f}s elapsed)",
-            file=sys.stderr,
-        )
-        try:  # a crashed child must not leave a stale payload behind
-            os.remove(child_payload)
-        except OSError:
-            pass
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env,
-                capture_output=True,
-                text=True,
-                timeout=max(120.0, hard_s - elapsed + 120.0),
-            )
-            sys.stderr.write(proc.stderr)
-        except subprocess.TimeoutExpired:
-            for n in chunk:
-                errors[n] = "chunk subprocess timeout"
-            suspect = True
-            continue
-        try:
-            with open(child_payload) as fh:
-                part = json.load(fh)
-        except (OSError, ValueError):
-            for n in chunk:
-                errors[n] = (
-                    f"chunk produced no payload (rc={proc.returncode})"
-                )
-            continue
-        part_q = part.get("queries", {})
-        timings.update(part_q)
-        errors.update(part.get("errors", {}))
-        skipped += part.get("skipped", [])
-        suspect = suspect or part.get("timings_suspect", False)
-        accounted = (
-            set(part_q) | set(part.get("errors", {}))
-            | set(part.get("skipped", []))
-        )
-        for n in chunk:
-            if n not in accounted:
-                errors[n] = "missing from chunk payload"
-    try:
-        os.remove(child_payload)
-    except OSError:
-        pass
-    # re-impose bench order on the merged timings
-    ordered = {n: timings[n] for n in bench_set if n in timings}
-    _emit_payload(ordered, errors, skipped, suspect, mode="chunked")
-
-
 def _local_json_path() -> str:
     """Full-payload destination for a top-level run. Two tracked
     protocols (r11 verdict item 5 — a driver round used to overwrite
@@ -541,16 +410,11 @@ def _local_json_path() -> str:
     )
 
 
-def _child_payload_path() -> str:
-    """Where THIS process writes its payload: chunk children get a
-    temp path via SPARK_GRAFT_BENCH_PAYLOAD, and BENCH_ONLY
-    adjudication runs get a temp sidecar — only a full top-level run
-    writes the git-tracked BENCH_LOCAL.json (r10 hygiene: isolated
-    re-measures used to clobber the committed artifact and needed a
-    git checkout afterwards)."""
-    p = os.environ.get("SPARK_GRAFT_BENCH_PAYLOAD")
-    if p:
-        return p
+def _payload_path() -> str:
+    """Where THIS process writes its payload: BENCH_ONLY adjudication
+    runs get a temp sidecar — only a full run writes the git-tracked
+    payload file (r10 hygiene: isolated re-measures used to clobber
+    the committed artifact and needed a git checkout afterwards)."""
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY"):
         import tempfile
 
@@ -574,13 +438,10 @@ def _emit_payload(
     errors: dict[str, str],
     skipped: list[str],
     suspect: bool,
-    mode: str,
 ) -> None:
     """Write the payload file and print the two stdout lines (short
-    summary + size-capped compact payload, the driver's parse target).
-    Shared by the single-session path and the chunked orchestrator.
-    ``mode`` labels the protocol — "inprocess" (canonical, the
-    driver's trend line) or "chunked" (fresh-JVM diagnostic)."""
+    summary + size-capped compact payload, the driver's parse
+    target)."""
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     try:
@@ -591,7 +452,7 @@ def _emit_payload(
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "mode": mode,
+        "mode": "inprocess",
         # "warm" = persistent artifact/tier store enabled (the trend
         # line); "cold" = SPARK_GRAFT_BENCH_COLD_STORE=1 sidecar, every
         # training/tier build paid in-region (r12 verdict item 3)
@@ -611,7 +472,7 @@ def _emit_payload(
     # driver's parse target — the full 176-query line was ~5.5 KB and
     # overflowed its ~2 KB tail buffer in r03-r06).
     try:
-        with open(_child_payload_path(), "w") as fh:
+        with open(_payload_path(), "w") as fh:
             json.dump(payload, fh, indent=1)
             fh.write("\n")
     except OSError as exc:
@@ -650,7 +511,7 @@ def _compact(payload: dict) -> dict:
         "sf": payload["sf"],
         "n": len(payload["queries"]),
         "omitted": 0,
-        "full": os.path.basename(_child_payload_path()),
+        "full": os.path.basename(_payload_path()),
     }
     if "errors" in payload:
         out["errors"] = len(payload["errors"])

@@ -374,6 +374,60 @@ def datacard(spark: SparkSession, sf_dir: str) -> dict:
 # ── observable funnel report over the composed pipeline ──────────────
 
 
+def _curation_gates(spark: SparkSession, sf_dir: str) -> tuple:
+    """The five gate frames curation_funnel and release_manifest
+    join onto their token frames, as bare doc_ids: (quality_keep,
+    cls_keep, exact_keep, canon_keep, contaminated) — the first four
+    keep sets, the last a drop set.
+
+    Each is localCheckpointed (r13; the r12 ivf_pq_recall_eval lesson,
+    guide §3.3 "materialise an intermediate to truncate the plan"):
+    composed inline, the report plan embeds five full gate pipelines
+    (classifier scoring, bloom decontamination, quality heuristics…)
+    and every downstream DataFrame op re-analyzes that tree — the r12
+    verdict found the query driver-bound (8-core ≈ 32-core).
+    Materialized, the report is five doc_id-keyed joins onto
+    LogicalRDDs. O(docs) rows of bare ids per gate — state the gates
+    compute anyway; blocks are released by the caller's
+    release_cached between queries."""
+    from parquet_extractor_spark.operators.contamination import (
+        ngram_decontamination,
+    )
+    from parquet_extractor_spark.operators.dedup import (
+        _components_tier,
+        _exact_keep_tier,
+    )
+    from parquet_extractor_spark.operators.quality import (
+        quality_classifier_scores,
+    )
+
+    quality_keep = (
+        quality_scores(spark, sf_dir)
+        .filter(F.col("quality_score") >= MIN_QUALITY)
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    cls_keep = (
+        quality_classifier_scores(spark, sf_dir)
+        .filter(F.col("keep"))
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    exact_keep = _exact_keep_tier(spark, sf_dir).localCheckpoint()
+    canon_keep = (
+        _components_tier(spark, sf_dir)
+        .filter(F.col("doc_id") == F.col("component"))
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    contaminated = (
+        ngram_decontamination(spark, sf_dir)
+        .select("doc_id")
+        .localCheckpoint()
+    )
+    return quality_keep, cls_keep, exact_keep, canon_keep, contaminated
+
+
 def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-by-stage survivor accounting for the curate() chain — the
     report a data engineer reads before shipping a corpus ("quality
@@ -399,54 +453,13 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (stage_idx, stage, n_docs, n_tokens, retained_frac).
     """
     from parquet_extractor_spark.functions.text import tokenize
-    from parquet_extractor_spark.operators.contamination import (
-        ngram_decontamination,
-    )
-    from parquet_extractor_spark.operators.dedup import (
-        _components_tier,
-        _exact_keep_tier,
-    )
-    from parquet_extractor_spark.operators.quality import (
-        quality_classifier_scores,
-    )
 
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(tokenize("text")).cast("bigint").alias("n")
     )
 
-    # localCheckpoint each gate's doc_id frame (r13; the r12
-    # ivf_pq_recall_eval lesson, guide §3.3 "materialise an
-    # intermediate to truncate the plan"): composed inline, the report
-    # plan embeds five full gate pipelines (classifier scoring, bloom
-    # decontamination, quality heuristics…) and every downstream
-    # DataFrame op re-analyzes that tree — the r12 verdict found the
-    # query driver-bound (8-core ≈ 32-core). Materialized, the report
-    # is five doc_id-keyed joins onto LogicalRDDs. O(docs) rows of
-    # bare ids per gate — state the gates compute anyway; blocks are
-    # released by the caller's release_cached between queries.
-    quality_keep = (
-        quality_scores(spark, sf_dir)
-        .filter(F.col("quality_score") >= MIN_QUALITY)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    cls_keep = (
-        quality_classifier_scores(spark, sf_dir)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    exact_keep = _exact_keep_tier(spark, sf_dir).localCheckpoint()
-    canon_keep = (
-        _components_tier(spark, sf_dir)
-        .filter(F.col("doc_id") == F.col("component"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    contaminated = (
-        ngram_decontamination(spark, sf_dir)
-        .select("doc_id")
-        .localCheckpoint()
+    quality_keep, cls_keep, exact_keep, canon_keep, contaminated = (
+        _curation_gates(spark, sf_dir)
     )
 
     flags = (
@@ -585,16 +598,6 @@ def release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the share column. Output ≤ |splits|×|sources| rows at any
     corpus size.
     """
-    from parquet_extractor_spark.operators.contamination import (
-        ngram_decontamination,
-    )
-    from parquet_extractor_spark.operators.dedup import (
-        _components_tier,
-        _exact_keep_tier,
-    )
-    from parquet_extractor_spark.operators.quality import (
-        quality_classifier_scores,
-    )
     from parquet_extractor_spark.functions.text import tokenize
     from parquet_extractor_spark.operators.training import _split_column
 
@@ -603,32 +606,8 @@ def release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size(tokenize("text")).cast("bigint").alias("n"),
     )
-    # Same gate materialization as curation_funnel (r13): five
-    # localCheckpointed doc_id frames truncate the five inlined gate
-    # pipelines out of the report plan.
-    quality_keep = (
-        quality_scores(spark, sf_dir)
-        .filter(F.col("quality_score") >= MIN_QUALITY)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    cls_keep = (
-        quality_classifier_scores(spark, sf_dir)
-        .filter(F.col("keep"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    exact_keep = _exact_keep_tier(spark, sf_dir).localCheckpoint()
-    canon_keep = (
-        _components_tier(spark, sf_dir)
-        .filter(F.col("doc_id") == F.col("component"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    contaminated = (
-        ngram_decontamination(spark, sf_dir)
-        .select("doc_id")
-        .localCheckpoint()
+    quality_keep, cls_keep, exact_keep, canon_keep, contaminated = (
+        _curation_gates(spark, sf_dir)
     )
     survivors = (
         docs.join(quality_keep, "doc_id", "left_semi")

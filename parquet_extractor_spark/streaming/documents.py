@@ -32,6 +32,12 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.operators.quality import quality_columns
+from parquet_extractor_spark.streaming.drain import (
+    clear_epoch_dirs,
+    drain,
+    drain_epochs,
+    overwrite_parquet,
+)
 
 MIN_QUALITY = 0.3  # same gate as pipelines.MIN_QUALITY
 
@@ -98,61 +104,29 @@ def run_curate_stream(
     timeout_s: int = 120,
     classifier: bool = False,
 ) -> DataFrame:
-    """Drain the documents source once (availableNow) through the
-    curation stream into a lang-partitioned parquet dataset; returns
-    the written dataset re-read as a batch frame.
-
-    The sink is idempotent under batch replay: foreachBatch is
-    at-least-once, so each epoch writes to its own ``epoch=N``
-    directory with mode("overwrite") — a replayed epoch replaces its
-    own output instead of appending duplicate rows, preserving the
-    'one row per content_hash' contract end-to-end. (``epoch`` shows
-    up as a partition column on re-read; callers that don't want it
-    drop it.) Epoch overwrite only protects WITHIN a run — a fresh
-    run (new checkpoint) restarts epoch numbering, so any stale epoch
-    dirs from a previous run are cleared up front rather than silently
-    unioned into the result."""
-    _clear_epoch_dirs(out_dir)
+    """Drain the documents source once through the curation stream
+    into a lang-partitioned parquet dataset; returns the written
+    dataset re-read as a batch frame. Epoch sink and replay semantics:
+    streaming/drain.py; stale epochs of a previous run are cleared
+    first, so the 'one row per content_hash' contract holds
+    end-to-end."""
+    clear_epoch_dirs(out_dir)
     stream = curate_stream(
         read_documents_stream(spark, sf_dir), classifier=classifier
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
+    def _write(batch: DataFrame, path: str) -> None:
         (
             batch.repartition("lang")
             .write.mode("overwrite")
             .partitionBy("lang")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
+            .parquet(path)
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "curate_docs")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        stream, os.path.join(checkpoint_dir, "curate_docs"), out_dir,
+        _write, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"curate stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
-
-
-def _clear_epoch_dirs(out_dir: str) -> None:
-    """Remove epoch=N partitions left by a PREVIOUS run. foreachBatch
-    epoch numbering restarts with each new checkpoint, so a rerun's
-    mode('overwrite') only replaces epochs it happens to reuse —
-    leftovers would read back as live rows."""
-    import shutil
-
-    if os.path.isdir(out_dir):
-        for name in os.listdir(out_dir):
-            if name.startswith("epoch="):
-                shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
 
 
 def near_dup_candidate_stream(
@@ -198,41 +172,26 @@ def run_near_dup_stream(
 ) -> DataFrame:
     """Drain the documents source once through the near-dup candidate
     stream (probing a static index of the same corpus) and return the
-    DISTINCT candidate pairs as a batch frame. Per-epoch overwrite
-    keeps the sink idempotent under foreachBatch replay, mirroring
-    run_curate_stream; stale epochs from earlier runs are cleared
+    DISTINCT candidate pairs as a batch frame. Epoch sink:
+    streaming/drain.py; stale epochs from earlier runs are cleared
     first — leftover candidate pairs are indistinguishable from live
     ones on re-read."""
     from parquet_extractor_spark.sources.tables import load_table
 
-    _clear_epoch_dirs(out_dir)
+    clear_epoch_dirs(out_dir)
     stream = near_dup_candidate_stream(
         read_documents_stream(spark, sf_dir),
         load_table(spark, sf_dir, "documents"),
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.distinct().write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
+    def _write(batch: DataFrame, path: str) -> None:
+        overwrite_parquet(batch.distinct(), path)
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "near_dup")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"near-dup stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
     return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
+        drain_epochs(
+            stream, os.path.join(checkpoint_dir, "near_dup"), out_dir,
+            _write, timeout_s,
+        )
         .drop("epoch")
         .distinct()
     )
@@ -418,17 +377,13 @@ def run_pack_nosplit_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = pack_nosplit_stream(reader.parquet(src_dir))
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -526,17 +481,13 @@ def run_kmv_sketch_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = kmv_sketch_stream(reader.parquet(src_dir))
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -586,8 +537,11 @@ def run_novelty_stream(
     known before cycle K" is ``read_snapshot(version=K-1)``.
 
     Per epoch one report row (epoch, n_docs, batch_grams,
-    novel_grams) lands under ``out_dir/epoch=N`` (idempotent
-    overwrite). Returns the drained report frame.
+    novel_grams) lands under ``out_dir/epoch=N`` (epoch sink:
+    streaming/drain.py). Earlier runs' epochs are NOT cleared: a
+    replay with a fresh checkpoint skips every tagged epoch, so the
+    report it returns is the one the first run wrote. Returns the
+    drained report frame.
 
     Scale shape: per cycle, one gram-keyed distinct over the BATCH
     (not the corpus) + one anti-join against the state table keyed by
@@ -609,8 +563,8 @@ def run_novelty_stream(
         .parquet(source_dir)
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        tag = f"epoch-{epoch}"
+    def _write(batch: DataFrame, path: str) -> None:
+        tag = os.path.basename(path).replace("=", "-")  # "epoch-N"
         if any(m.get("tag") == tag for m in snapshots(state_table_dir)):
             return  # replayed epoch: report + state already committed
         grams = novelty_gram_hashes(batch).persist()
@@ -630,27 +584,15 @@ def run_novelty_stream(
         # report first, tagged state commit last: a crash in between
         # replays the whole epoch (report overwrite is idempotent); a
         # commit implies the report already landed
-        report.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
+        overwrite_parquet(report, path)
         commit_snapshot(novel, state_table_dir, mode="append", tag=tag)
         novel.unpersist()
         grams.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "novelty")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        stream, os.path.join(checkpoint_dir, "novelty"), out_dir, _write,
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"novelty stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def release_manifest_ledger_stream(
@@ -758,37 +700,18 @@ def run_release_manifest_stream(
     out_dir: str,
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the documents source once (availableNow) through the
-    release-ledger stream into per-epoch parquet directories (the
-    idempotent at-least-once sink every streaming module here uses:
-    a replayed epoch overwrites its own output), then aggregate the
-    landed ledger to the manifest. Returns the manifest frame."""
-    _clear_epoch_dirs(out_dir)
+    """Drain the documents source once through the release-ledger
+    stream into per-epoch parquet directories (streaming/drain.py),
+    then aggregate the landed ledger to the manifest. Returns the
+    manifest frame."""
+    clear_epoch_dirs(out_dir)
     ledger = release_manifest_ledger_stream(
         read_documents_stream(spark, sf_dir), spark, sf_dir
     )
-
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        ledger.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "release_manifest"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    landed = drain_epochs(
+        ledger, os.path.join(checkpoint_dir, "release_manifest"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"release-manifest stream did not drain within {timeout_s}s; "
-            "partial output discarded"
-        )
-    landed = spark.read.option("basePath", out_dir).parquet(out_dir)
     return manifest_from_ledger(
         landed.select("doc_id", "source", "n", "split")
     )

@@ -55,6 +55,7 @@ from parquet_extractor_spark.operators.entities import (
     hash_prefix_grams,
     verify_candidate_pairs,
 )
+from parquet_extractor_spark.streaming.drain import drain
 
 STATE_SCHEMA = (
     "rec_id BIGINT, name STRING, cluster BIGINT, "
@@ -363,20 +364,11 @@ def run_customer_er_stream(
             new_state, state_table_dir, mode="overwrite", tag=tag
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "customer_er"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        os.path.join(checkpoint_dir, "customer_er"),
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"customer ER stream did not drain within {timeout_s}s"
-        )
     return read_snapshot(spark, state_table_dir)
 
 
@@ -422,18 +414,9 @@ def run_entity_resolution_stream(
             new_state, state_table_dir, mode="overwrite", tag=tag
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "entity_resolution"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        os.path.join(checkpoint_dir, "entity_resolution"),
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"entity resolution stream did not drain within {timeout_s}s"
-        )
     return read_snapshot(spark, state_table_dir)

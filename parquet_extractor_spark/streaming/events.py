@@ -4,10 +4,10 @@ The reference is strictly batch; this is the driver-mandated streaming
 extension. The same hourly aggregation as
 ``operators.relational.events_hourly`` expressed incrementally:
 file-source stream → watermark → tumbling window → stateful agg.
-``run_events_hourly_stream`` uses the availableNow trigger so a test
-(or a backfill) drains the source exactly once and stops — the
-batch/stream results must be identical, which is the correctness
-contract Structured Streaming gives us for free.
+Every runner drains the source exactly once and stops
+(``streaming.drain``), so a test (or a backfill) sees the complete
+result — the batch/stream results must be identical, which is the
+correctness contract Structured Streaming gives us for free.
 
 Scale notes: the stateful agg shuffles on (window, event_type) — the
 same key the batch plan uses; the watermark bounds state (late events
@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from parquet_extractor_spark.streaming.drain import drain
 
 # Physical schema of events.parquet (file streams require an explicit
 # schema). ts arrives either as TIMESTAMP (micros fixtures) or as a
@@ -114,19 +116,17 @@ def run_events_hourly_stream(
     table_name: str = "events_hourly_stream",
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the events source once (availableNow) into an in-memory
-    sink table; returns the result DataFrame. Complete output mode:
-    file sources never drop the final windows behind the watermark."""
+    """Drain the events source once into an in-memory sink table;
+    returns the result DataFrame. Complete output mode: file sources
+    never drop the final windows behind the watermark."""
     stream = hourly_agg(read_events_stream(spark, sf_dir))
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -157,15 +157,13 @@ def run_sessionization_stream(
             "total_value",
         )
     )
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -225,15 +223,13 @@ def run_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -253,9 +249,9 @@ def run_stream_to_dataset(
     parquet dataset (sinks.dataset.write_dataset) with exactly-once
     semantics per batch id from the checkpoint.
 
-    Here: hourly per-type aggregates appended per micro-batch. With
-    availableNow the file source drains once; on a live stream the
-    same code upserts continuously. Returns the written dataset.
+    Here: hourly per-type aggregates appended per micro-batch, drained
+    once (streaming/drain.py); on a live stream the same code upserts
+    continuously. Returns the written dataset.
     """
     from parquet_extractor_spark.sinks.dataset import write_dataset
 
@@ -270,14 +266,11 @@ def run_stream_to_dataset(
             mode="append",
         )
 
-    query = (
-        hourly.writeStream.foreachBatch(_sink)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "to_dataset"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        hourly.writeStream.foreachBatch(_sink).outputMode("complete"),
+        os.path.join(checkpoint_dir, "to_dataset"),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.read.parquet(out_dir)
 
 
@@ -339,15 +332,13 @@ def run_view_purchase_join_stream(
         "view_event_id",
         F.unix_timestamp("view_ts").alias("view_epoch"),
     )
-    query = (
+    drain(
         joined.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -393,15 +384,13 @@ def run_enriched_stream(
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
-    query = (
+    drain(
         enriched.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -433,15 +422,13 @@ def run_dedup_stream(
     """Drain the events source once through the streaming dedup into a
     memory sink; append mode (dedup emits rows, not aggregates)."""
     stream = dedup_stream(read_events_stream(spark, sf_dir))
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, table_name))
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     return spark.table(table_name)
 
 
@@ -473,8 +460,8 @@ def run_xmr_control_stream(
     timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of operators.timeseries.events_xmr_control:
-    drain the daily-volume stream (availableNow, complete mode — file
-    sources never drop the final windows), then run the SAME
+    drain the daily-volume stream (complete mode — file sources never
+    drop the final windows), then run the SAME
     xmr_control_from_active computation over the drained counts. The
     stream carries only the windowed counts; densification and limits
     are post-drain batch arithmetic on the bounded day axis."""
@@ -483,17 +470,13 @@ def run_xmr_control_stream(
     )
 
     stream = daily_volume_agg(read_events_stream(spark, sf_dir))
-    query = (
+    drain(
         stream.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("complete")
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, table_name)
-        )
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        os.path.join(checkpoint_dir, table_name),
+        timeout_s,
     )
-    query.awaitTermination(timeout_s)
     # localCheckpoint: the memory-sink view is one physical leaf, so
     # the helper's grid↔active self-join cannot be attribute-deduped
     # by the analyzer; checkpointing the (days × types)-bounded

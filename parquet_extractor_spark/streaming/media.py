@@ -10,9 +10,8 @@ feature table. The fat binaries never sit in state: feature extraction
 is stateless row-at-a-time work, so the stream's memory profile is one
 Arrow batch per task regardless of history.
 
-Sink idempotency matches streaming/documents.py: each epoch writes to
-its own ``epoch=N`` directory with overwrite, so an at-least-once
-foreachBatch replay replaces its own output instead of duplicating.
+Every runner drains through ``streaming.drain.drain_epochs`` (epoch
+sink and replay semantics are documented there).
 """
 
 from __future__ import annotations
@@ -24,6 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from parquet_extractor_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_features,
+)
+from parquet_extractor_spark.streaming.drain import (
+    drain_epochs,
+    overwrite_parquet,
 )
 
 
@@ -41,34 +44,24 @@ def run_media_features_stream(
     out_dir: str,
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the media source once (availableNow) through feature
-    extraction into a kind-partitioned feature table; returns the
-    written table re-read as a batch frame (epoch appears as a
-    partition column — drop it if unwanted)."""
+    """Drain the media source once through feature extraction into a
+    kind-partitioned feature table; returns the written table re-read
+    as a batch frame (epoch appears as a partition column — drop it if
+    unwanted)."""
     feats = extract_features(read_media_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
+    def _write(batch: DataFrame, path: str) -> None:
         (
             batch.repartition("kind")
             .write.mode("overwrite")
             .partitionBy("kind")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
+            .parquet(path)
         )
 
-    query = (
-        feats.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "media_feats")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        feats, os.path.join(checkpoint_dir, "media_feats"), out_dir, _write,
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"media feature stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def read_video_stream(spark: SparkSession, media_dir: str) -> DataFrame:
@@ -102,35 +95,17 @@ def run_video_metadata_stream(
     the same pure parsers the batch path and the literal oracle use)
     is a stateless per-row projection, so it composes onto the file
     stream unchanged: no watermark, no state store, one Arrow batch
-    of memory per task. Epoch-overwrite sink = idempotent under
-    at-least-once replay, matching every other stream in this
-    package."""
+    of memory per task."""
     from parquet_extractor_spark.operators.multimodal import (
         video_stream_metadata,
     )
 
     meta = video_stream_metadata(read_video_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        meta.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "video_meta")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        meta, os.path.join(checkpoint_dir, "video_meta"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"video metadata stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def run_image_metadata_stream(
@@ -146,34 +121,17 @@ def run_image_metadata_stream(
     parsers the batch path and the literal oracle use) is a stateless
     per-row projection, so it composes onto the file stream
     unchanged: no watermark, no state store, header-bounded CPU per
-    row regardless of payload size. Epoch-overwrite sink = idempotent
-    under at-least-once replay, like every other stream here."""
+    row regardless of payload size."""
     from parquet_extractor_spark.operators.multimodal import (
         image_header_metadata,
     )
 
     meta = image_header_metadata(read_video_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        meta.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "image_meta")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        meta, os.path.join(checkpoint_dir, "image_meta"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"image metadata stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def run_gif_frames_stream(
@@ -192,8 +150,7 @@ def run_gif_frames_stream(
     watermark, no state store, one animation's frames of memory per
     row. This is the continuously-ingesting shape of a video-frame
     curation feed, running on the one format the in-repo codecs
-    decode end-to-end. Epoch-overwrite sink = idempotent under
-    at-least-once replay, like every other stream here."""
+    decode end-to-end."""
     from parquet_extractor_spark.operators.multimodal import (
         sample_gif_frames,
     )
@@ -202,26 +159,10 @@ def run_gif_frames_stream(
         read_media_stream(spark, media_dir), every_ms=every_ms
     )
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch}"))
-        )
-
-    query = (
-        frames.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "gif_frames")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        frames, os.path.join(checkpoint_dir, "gif_frames"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"gif frame stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 # ── streaming pHash (continuous image-dedup ingestion) ───────────────
@@ -260,7 +201,7 @@ def run_phash_stream(
     timeout_s: int = 120,
 ) -> DataFrame:
     """Streaming twin of ``operators.multimodal.image_phashes``: drain
-    the image landing dir once (availableNow) through the SAME decode
+    the image landing dir once through the SAME decode
     → DCT → threshold mapInPandas stage and append (media_id, variant,
     phash, bands) rows. Hashing is stateless per row, so state is one
     Arrow batch per task; the banded near-dup join then runs as a
@@ -271,23 +212,10 @@ def run_phash_stream(
 
     hashes = image_phashes(read_neardup_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        hashes.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "phash")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        hashes, os.path.join(checkpoint_dir, "phash"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(f"phash stream did not drain within {timeout_s}s")
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def run_audio_fingerprint_stream(
@@ -299,26 +227,15 @@ def run_audio_fingerprint_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.multimodal.audio_fingerprints``
     — same landing-dir shape as run_phash_stream (the neardup
-    (media_id, variant, data) schema), same epoch-idempotent sink;
-    the contour hashing is stateless per row."""
+    (media_id, variant, data) schema), same epoch sink; the contour
+    hashing is stateless per row."""
     from parquet_extractor_spark.operators.multimodal import (
         audio_fingerprints,
     )
 
     hashes = audio_fingerprints(read_neardup_stream(spark, media_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        hashes.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "afp"))
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        hashes, os.path.join(checkpoint_dir, "afp"), out_dir,
+        overwrite_parquet, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(f"afp stream did not drain within {timeout_s}s")
-    return spark.read.option("basePath", out_dir).parquet(out_dir)

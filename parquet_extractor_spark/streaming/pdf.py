@@ -10,9 +10,7 @@ document table. Extraction is stateless row-at-a-time work, so the
 stream holds no state and its memory profile is one Arrow batch per
 task regardless of history.
 
-Sink idempotency matches streaming/media.py: each epoch writes to its
-own ``epoch=N`` directory with overwrite, so an at-least-once
-foreachBatch replay replaces its own output instead of duplicating.
+Epoch sink and replay semantics: ``streaming.drain``.
 """
 
 from __future__ import annotations
@@ -30,6 +28,10 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.sources.pdf import extract_docs_frame
+from parquet_extractor_spark.streaming.drain import (
+    drain_epochs,
+    overwrite_parquet,
+)
 
 # binaryFile's fixed schema — streaming file sources require one
 # explicitly even when the format defines it.
@@ -63,28 +65,14 @@ def run_pdf_ingest_stream(
     out_dir: str,
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the PDF landing directory once (availableNow) through
-    text extraction into a parquet document table; returns the written
-    table re-read as a batch frame (epoch appears as a partition
-    column — drop it if unwanted)."""
-    docs = extract_docs_frame(read_pdf_stream(spark, pdf_dir))
-
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        docs.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "pdf_ingest")
-        )
-        .trigger(availableNow=True)
-        .start()
+    """Drain the PDF landing directory once through text extraction
+    into a parquet document table; returns the written table re-read
+    as a batch frame (epoch appears as a partition column — drop it if
+    unwanted)."""
+    return drain_epochs(
+        extract_docs_frame(read_pdf_stream(spark, pdf_dir)),
+        os.path.join(checkpoint_dir, "pdf_ingest"),
+        out_dir,
+        overwrite_parquet,
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"pdf ingest stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)

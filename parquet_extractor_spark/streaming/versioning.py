@@ -11,8 +11,7 @@ stateless, so the stream holds no state and no watermark; 'removed'
 is inherently invisible to an insert stream (only the batch
 full-outer diff reports it), which the equality test encodes.
 
-Sink idempotency matches the other streaming modules: per-epoch
-overwrite directories.
+Epoch sink and replay semantics: ``streaming.drain``.
 """
 
 from __future__ import annotations
@@ -30,6 +29,11 @@ from parquet_extractor_spark.sources.tables import load_table
 from parquet_extractor_spark.streaming.documents import (
     read_documents_stream,
 )
+from parquet_extractor_spark.streaming.drain import (
+    drain,
+    drain_epochs,
+    overwrite_parquet,
+)
 
 
 def run_version_diff_stream(
@@ -39,33 +43,18 @@ def run_version_diff_stream(
     out_dir: str,
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the documents landing dir once (availableNow) through the
-    v2-snapshot projection and the stream-static classification join;
-    returns the written changelog re-read as a batch frame."""
+    """Drain the documents landing dir once through the v2-snapshot
+    projection and the stream-static classification join; returns the
+    written changelog re-read as a batch frame."""
     v1 = snapshot_v1(load_table(spark, sf_dir, "documents"))
     v2_stream = snapshot_v2(read_documents_stream(spark, sf_dir))
-    changelog = classify_v2_against_v1(v2_stream, v1)
-
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        changelog.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "version_diff"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        classify_v2_against_v1(v2_stream, v1),
+        os.path.join(checkpoint_dir, "version_diff"),
+        out_dir,
+        overwrite_parquet,
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"version diff stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def run_versioned_table_stream(
@@ -93,20 +82,11 @@ def run_versioned_table_stream(
             )
         )
 
-    query = (
-        stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "versioned_table"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(_sink),
+        os.path.join(checkpoint_dir, "versioned_table"),
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"versioned table stream did not drain within {timeout_s}s"
-        )
     return committed
 
 
@@ -122,8 +102,8 @@ def run_contamination_gate_stream(
     r08 next-round #7). Arriving v2 docs are classified against the
     static v1 digest table and gram-screened against the static
     broadcast benchmark set PER MICRO-BATCH; each epoch writes its
-    doc-level screen rows to an epoch-keyed directory (idempotent
-    under replay, like every other streaming sink here). The per-doc
+    doc-level screen rows to an epoch-keyed directory
+    (streaming/drain.py). The per-doc
     screen carries no cross-doc state, so the union of micro-batch
     outputs is provably the batch screen — the equality test in
     tests/test_streaming.py pins rollup(stream rows) == batch gate.
@@ -145,26 +125,13 @@ def run_contamination_gate_stream(
     bench = benchmark_grams(contamination_v2_docs(base))
     v2_stream = contamination_v2_docs(read_documents_stream(spark, sf_dir))
 
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        screened = contamination_doc_screen(
-            contamination_delta(batch, v1), bench
-        )
-        screened.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
+    def _write(batch: DataFrame, path: str) -> None:
+        overwrite_parquet(
+            contamination_doc_screen(contamination_delta(batch, v1), bench),
+            path,
         )
 
-    query = (
-        v2_stream.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "contamination_gate"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    return drain_epochs(
+        v2_stream, os.path.join(checkpoint_dir, "contamination_gate"),
+        out_dir, _write, timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"contamination gate stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)

@@ -9,9 +9,7 @@ modes. Parsing is stateless per file, so the stream holds no state
 and its memory profile is one Arrow batch per task regardless of how
 long the crawl has been running.
 
-Sink idempotency matches streaming/pdf.py: each epoch writes its own
-``epoch=N`` directory with overwrite, so an at-least-once
-foreachBatch replay replaces its own output instead of duplicating.
+Epoch sink and replay semantics: ``streaming.drain``.
 """
 
 from __future__ import annotations
@@ -29,6 +27,11 @@ from pyspark.sql.types import (
 )
 
 from parquet_extractor_spark.sources.warc import extract_warc_frame
+from parquet_extractor_spark.streaming.drain import (
+    drain,
+    drain_epochs,
+    overwrite_parquet,
+)
 
 _BINARY_FILE_SCHEMA = StructType(
     [
@@ -60,31 +63,16 @@ def run_warc_ingest_stream(
     out_dir: str,
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Drain the WARC landing directory once (availableNow) through
-    record parsing into a parquet table; returns the written table
-    re-read as a batch frame (epoch appears as a partition column)."""
-    docs = extract_warc_frame(read_warc_stream(spark, warc_dir))
-
-    def _sink(batch: DataFrame, epoch: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch}")
-        )
-
-    query = (
-        docs.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "warc_ingest"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    """Drain the WARC landing directory once through record parsing
+    into a parquet table; returns the written table re-read as a batch
+    frame (epoch appears as a partition column)."""
+    return drain_epochs(
+        extract_warc_frame(read_warc_stream(spark, warc_dir)),
+        os.path.join(checkpoint_dir, "warc_ingest"),
+        out_dir,
+        overwrite_parquet,
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"warc ingest stream did not drain within {timeout_s}s"
-        )
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
 
 
 def run_capture_dedup_stream(
@@ -136,18 +124,9 @@ def run_capture_dedup_stream(
             )
         )
 
-    query = (
-        records.writeStream.foreachBatch(_sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir, "capture_dedup"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        records.writeStream.foreachBatch(_sink),
+        os.path.join(checkpoint_dir, "capture_dedup"),
+        timeout_s,
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError(
-            f"capture dedup stream did not drain within {timeout_s}s"
-        )
     return committed

@@ -1,6 +1,6 @@
 """Unit tests for bench.py's harness logic that must not depend on a
-SparkSession: the compact-payload trimmer and the chunked
-orchestrator's merge/accounting (children mocked — no JVMs)."""
+SparkSession: the compact-payload trimmer, the payload file routing
+and the payload schema."""
 
 from __future__ import annotations
 
@@ -54,108 +54,30 @@ def test_compact_payload_carries_heavy_tail():
     assert out["slowest"]["q399"] == 99.9
 
 
-def test_orchestrator_merges_chunk_payloads(monkeypatch, tmp_path, capsys):
-    """Each mocked child writes its chunk's payload to the TEMP path
-    the orchestrator hands it (SPARK_GRAFT_BENCH_PAYLOAD — never the
-    git-tracked BENCH_LOCAL.json, r10 advice); the orchestrator must
-    merge timings in bench order, propagate errors/skips, flag chunk
-    members missing from a child payload instead of silently dropping
-    them, and label the merged payload mode=chunked."""
-    local = tmp_path / "BENCH_LOCAL.json"
+def test_emit_payload_writes_inprocess_payload(monkeypatch, tmp_path, capsys):
+    """The full payload lands in the payload file and the compact
+    line is stdout's LAST line; both keep the ``"mode": "inprocess"``
+    label that committed payload readers key on."""
+    local = tmp_path / "BENCH_DRIVER.json"
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
     monkeypatch.setattr(bench, "_local_json_path", lambda: str(local))
-
-    bench_set = [f"q{i}" for i in range(6)]
-    calls = []
-    child_paths = []
-
-    class FakeProc:
-        returncode = 0
-        stderr = ""
-
-    def fake_run(cmd, env=None, capture_output=True, text=True, timeout=0):
-        chunk = env["SPARK_GRAFT_BENCH_ONLY"].split(",")
-        calls.append(chunk)
-        child_paths.append(env["SPARK_GRAFT_BENCH_PAYLOAD"])
-        # the committed artifact must not exist mid-run (children
-        # never touch it; the orchestrator writes it once at the end)
-        assert not local.exists()
-        part = {
-            "queries": {n: 1.0 for n in chunk if n != "q4"},
-            "sf": 0.1,
-            "mode": "inprocess",
-        }
-        if "q4" in chunk:
-            part["errors"] = {"q4": "boom"}
-        with open(env["SPARK_GRAFT_BENCH_PAYLOAD"], "w") as fh:
-            json.dump(part, fh)
-        return FakeProc()
-
-    import subprocess
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-
-    bench._orchestrate(bench_set, chunk_size=3)
-    captured = capsys.readouterr()
+    bench._emit_payload({"q0": 1.0, "q1": 2.0}, {"q2": "boom"}, [], False)
     payload = json.loads(open(local).read())
-    assert calls == [bench_set[:3], bench_set[3:]]
-    assert all(p != str(local) for p in child_paths)
-    assert list(payload["queries"]) == ["q0", "q1", "q2", "q3", "q5"]
-    assert payload["errors"] == {"q4": "boom"}
-    assert payload["mode"] == "chunked"
-    assert "skipped" not in payload
-    # the child temp payload is cleaned up after the merge
-    assert not os.path.exists(child_paths[0])
-    last = captured.out.strip().splitlines()[-1]
-    compact = json.loads(last)
-    assert compact["n"] == 5 and compact["errors"] == 1
-    assert compact["mode"] == "chunked"
-
-
-def test_orchestrator_flags_missing_and_stale_payload(
-    monkeypatch, tmp_path, capsys
-):
-    """A child that crashes before writing a payload must surface
-    every chunk member as an error (the pre-launch payload delete
-    prevents a stale read) — and a PRE-EXISTING committed
-    BENCH_LOCAL.json survives untouched until the final merge write
-    (r10 advice: a dead orchestrator must not leave it deleted)."""
-    local = tmp_path / "BENCH_LOCAL.json"
-    monkeypatch.setattr(bench, "_local_json_path", lambda: str(local))
-    # committed artifact from some previous run
-    with open(local, "w") as fh:
-        json.dump({"queries": {"zz": 9.9}}, fh)
-
-    class FakeProc:
-        returncode = 1
-        stderr = ""
-
-    def fake_run(cmd, env=None, capture_output=True, text=True, timeout=0):
-        # mid-run, the previous committed artifact is still intact
-        assert json.loads(open(local).read())["queries"] == {"zz": 9.9}
-        return FakeProc()  # writes nothing
-
-    import subprocess
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    bench._orchestrate(["a", "b"], chunk_size=2)
-    capsys.readouterr()
-    payload = json.loads(open(local).read())
-    assert payload["queries"] == {}
-    assert set(payload["errors"]) == {"a", "b"}
-    assert "stale" not in json.dumps(payload)
+    assert payload["mode"] == "inprocess"
+    assert payload["queries"] == {"q0": 1.0, "q1": 2.0}
+    assert payload["errors"] == {"q2": "boom"}
+    compact = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert compact["mode"] == "inprocess"
+    assert compact["n"] == 2 and compact["errors"] == 1
 
 
 def test_child_payload_path_env_routing(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_PAYLOAD", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
-    assert bench._child_payload_path() == bench._local_json_path()
+    assert bench._payload_path() == bench._local_json_path()
     # BENCH_ONLY adjudication runs must not clobber the committed
     # artifact: payload goes to a temp sidecar
     monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "corpus_stats")
-    assert bench._child_payload_path() != bench._local_json_path()
-    # an explicit payload path (chunk children) wins over both
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_PAYLOAD", "/tmp/x.json")
-    assert bench._child_payload_path() == "/tmp/x.json"
+    assert bench._payload_path() != bench._local_json_path()
 
 
 def test_cold_store_mode_routes_and_tags(monkeypatch):

@@ -330,6 +330,31 @@ def test_no_direct_unpartitioned_windows_in_source():
     )
 
 
+def test_streams_drain_only_through_drain_module():
+    """Every stream runner starts, waits for and times out its query
+    through streaming/drain.py: a hand-copied drain that drops
+    awaitTermination's result returns partial rows and leaves its
+    query running. No other package module may mention the trigger
+    or the wait (docstrings included)."""
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parquet_extractor_spark",
+    )
+    allowed = os.path.join(root, "streaming", "drain.py")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == allowed:
+                continue
+            for lineno, line in enumerate(open(path), start=1):
+                if "awaitTermination(" in line or "availableNow" in line:
+                    offenders.append(f"{path}:{lineno}")
+    assert not offenders, f"drain through streaming/drain.py: {offenders}"
+
+
 def test_brand_price_rank_assoc_pair_join_is_bucketed(spark, sf_small):
     """The r10 scale contract for the pair generator: the self-join
     must key on (brand, bucket), not brand alone — a brand-only

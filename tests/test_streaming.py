@@ -1357,3 +1357,59 @@ def test_customer_er_stream_replay_noop(spark, sf_small, tmp_path):
     rows2 = sorted((r.c_custkey, r.cluster) for r in replay.collect())
     assert rows1 == rows2
     assert len(snapshots(state_dir)) == n_snaps
+
+
+def _hourly_rows(df):
+    return {
+        (r.hour_epoch, r.event_type): (r.n_events, r.total_value)
+        for r in df.collect()
+    }
+
+
+def test_timed_out_memory_drain_stops_query(spark, sf_small, tmp_path):
+    """A drain that misses its timeout raises and stops its query
+    instead of returning a partial table: a query left running under
+    the memory-table name would make the next run of that table fail
+    to start."""
+    import pytest
+
+    name = "events_hourly_timeout"
+    with pytest.raises(TimeoutError, match="events_hourly_timeout"):
+        run_events_hourly_stream(
+            spark, sf_small, str(tmp_path / "ck_to1"),
+            table_name=name, timeout_s=0.001,
+        )
+    assert name not in {q.name for q in spark.streams.active}
+    rerun = run_events_hourly_stream(
+        spark, sf_small, str(tmp_path / "ck_to2"), table_name=name
+    )
+    assert _hourly_rows(rerun) == _hourly_rows(events_hourly(spark, sf_small))
+
+
+def test_timed_out_epoch_drain_stops_query(spark, sf_small, tmp_path):
+    """The same timeout contract for a foreachBatch epoch runner."""
+    import pytest
+
+    from parquet_extractor_spark.sinks.pdf import write_pdfs
+    from parquet_extractor_spark.sources.tables import load_table
+    from parquet_extractor_spark.streaming.pdf import run_pdf_ingest_stream
+
+    landing = str(tmp_path / "pdf_landing_to")
+    docs = (
+        load_table(spark, sf_small, "documents")
+        .where(F.col("doc_id") < 3)
+        .select(
+            F.col("doc_id").cast("string").alias("title"),
+            F.col("doc_id"),
+            F.col("text").alias("content"),
+            F.concat(F.col("doc_id"), F.lit(".pdf")).alias("filename"),
+        )
+    )
+    assert write_pdfs(docs, landing)["written"] == 3
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="pdf_ingest"):
+        run_pdf_ingest_stream(
+            spark, landing, str(tmp_path / "ck_pdf_to"),
+            str(tmp_path / "pdf_out_to"), timeout_s=0.001,
+        )
+    assert {q.id for q in spark.streams.active} == before
